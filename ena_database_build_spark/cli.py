@@ -5,7 +5,7 @@ The reference CLI takes ENA directory roots, a Windows-INI database
 config for the idmapping MySQL table, and an output directory, then
 schedules Dask tasks.  Here the same surface wires the Spark lineage:
 
-    read_embl_lines -> build_all -> write_ena_tab
+    read_embl_records -> build_all -> write_ena_tab
 
 Scheduler knobs (``--scheduler-file``/``--n-workers``) become the Spark
 master URL and shuffle-partition count; ``--local-scratch`` maps to
@@ -24,7 +24,7 @@ import sys
 
 from ena_database_build_spark.plans.ena_pipeline import build_all
 from ena_database_build_spark.session import get_spark
-from ena_database_build_spark.sources.embl import read_embl_lines
+from ena_database_build_spark.sources.embl import read_embl_records
 from ena_database_build_spark.sources.idmapping import (
     read_idmapping_jdbc,
     read_idmapping_parquet,
@@ -142,7 +142,7 @@ def main(argv: list[str] | None = None) -> None:
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
     )
-    lines = read_embl_lines(
+    records = read_embl_records(
         spark,
         args.ena_paths,
         apply_division_filter=not args.no_division_filter,
@@ -154,23 +154,26 @@ def main(argv: list[str] | None = None) -> None:
         url, options = jdbc_url_from_ini(args.db_config, args.db_name)
         idmapping = read_idmapping_jdbc(spark, url, args.db_table, **options)
 
-    result = build_all(lines, idmapping, broadcast_mapping=args.broadcast_mapping)
-    write_ena_tab(
-        result.ena_tab,
-        args.output_dir,
-        partition_by_source_dir=args.partition_by_source_dir,
-        single_file=args.single_file,
-    )
-    if args.rejects_dir:
-        # dead-letter channels keep the source file column (unlike the
-        # ena table, where it is provenance-only)
-        for name, df in [
-            ("records", result.rejected_records),
-            ("blocks", result.rejected_blocks),
-        ]:
-            df.write.mode("overwrite").option("sep", "\t").option(
-                "header", "false"
-            ).csv(f"{args.rejects_dir}/{name}")
+    result = build_all(records, idmapping, broadcast_mapping=args.broadcast_mapping)
+    try:
+        write_ena_tab(
+            result.ena_tab,
+            args.output_dir,
+            partition_by_source_dir=args.partition_by_source_dir,
+            single_file=args.single_file,
+        )
+        if args.rejects_dir:
+            # dead-letter channels keep the source file column (unlike the
+            # ena table, where it is provenance-only)
+            for name, df in [
+                ("records", result.rejected_records),
+                ("blocks", result.rejected_blocks),
+            ]:
+                df.write.mode("overwrite").option("sep", "\t").option(
+                    "header", "false"
+                ).csv(f"{args.rejects_dir}/{name}")
+    finally:
+        result.unpersist()
 
 
 if __name__ == "__main__":

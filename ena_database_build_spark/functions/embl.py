@@ -1,4 +1,5 @@
-"""EMBL flat-file line expressions (operators F1-F7, P1-P2, P4-P9).
+"""EMBL flat-file line and record-text expressions (operators F1-F7,
+P1-P2, P4-P9).
 
 Each function takes/returns Columns so Catalyst can push the cheap
 prefix predicates to the scan and keep every regex inside whole-stage
@@ -14,10 +15,6 @@ from pyspark.sql import functions as F
 
 # P1 — ID line: (ena_id, topology, length_bp)  (parse_embl.py:16)
 ID_LINE_PATTERN = r"^ID\s+(\w+);\s\w+\s\w+;\s(\w+);.*;\s(\d+)\sBP"
-# P2 — xref qualifiers (parse_embl.py:21-23); one pattern per alternative
-# because Spark's regexp_extract addresses a single group cleanly.
-PROTEIN_ID_PATTERN = r'^FT\s+/protein_id="([a-zA-Z0-9\.]+)"'
-UNIPROT_XREF_PATTERN = r'^FT\s+/db_xref="UniProtKB/[a-zA-Z0-9-]+:(\w+)"'
 # P4 — start of any feature block (parse_embl.py:47)
 FT_START_PATTERN = r"^FT\s\s\s[a-zA-Z0-9-]"
 # F1 — taxonomic-division filename filter for sequence/ dirs
@@ -26,10 +23,6 @@ SEQUENCE_DIVISION_PATTERN = r"_(ENV|PRO|FUN|PHG)_"
 # P9 — output-partition naming from the directory layout
 # (dask_tasks.py:138-148)
 SOURCE_DIR_PATTERN = r"(wgs)/(\w*)/(\w*)|(sequence)/(\w*)"
-
-
-def _nullif_empty(c: Column) -> Column:
-    return F.when(c == "", F.lit(None)).otherwise(c)
 
 
 # --- F2: line-family prefix filter (parse_embl.py:488-489) -----------------
@@ -104,28 +97,75 @@ def is_qualifier_continuation(line: Column) -> Column:
     return line.startswith("FT    ")
 
 
-# --- P2: xref extraction ----------------------------------------------------
+# --- G1/G2 over text: records and feature blocks ---------------------------
+# A record's text is its lines joined by "\n".  Boundaries are matched on
+# an explicit "\n", never on (?m) anchors or ".": Java ends a line at
+# U+0085 and U+2028 there, while the line split (\r\n, \r, \n) does not.
 
-def protein_id(line: Column) -> Column:
-    return _nullif_empty(F.regexp_extract(line, PROTEIN_ID_PATTERN, 1))
+RECORD_SPLIT = r"\n(?=ID   )"
+FEATURE_SPLIT = r"\n(?=FT   [a-zA-Z0-9-])"
+# P2 — xref qualifiers (parse_embl.py:21-23), one pattern per
+# alternative, each anchored on an FT qualifier-continuation line: the
+# reference's ``^FT\s+`` on a line that starts with ``FT    `` (P6)
+_CONTINUATION = r"\nFT    [ \t\x0B\f]*"
+PROTEIN_ID_IN_BLOCK = _CONTINUATION + r'/protein_id="([a-zA-Z0-9\.]+)"'
+UNIPROT_XREF_IN_BLOCK = _CONTINUATION + r'/db_xref="UniProtKB/[a-zA-Z0-9-]+:(\w+)"'
 
 
-def uniprot_id(line: Column) -> Column:
-    return _nullif_empty(F.regexp_extract(line, UNIPROT_XREF_PATTERN, 1))
+def first_line(text: Column) -> Column:
+    return F.substring_index(text, "\n", 1)
+
+
+def starts_with_feature(text: Column) -> Column:
+    return text.rlike(r"^FT   [a-zA-Z0-9-]")
+
+
+def is_voided_record(text: Column) -> Column:
+    """F3 over a record's text: some ``OC`` line names Eukaryota without
+    `` Fungi`` on that same line (:func:`is_drop_taxonomy_line`)."""
+    return text.rlike(r"(?:^|\n)(?=OC   )(?![^\n]* Fungi)[^\n]*Eukaryota")
+
+
+def block_candidate_text(block: Column) -> Column:
+    """P6: a feature block's head line plus its ``FT    `` continuation
+    lines, joined by "\\n"; any other line inside the block is skipped,
+    like the state machine's fall-through (parse_embl.py:564)."""
+    return F.concat_ws(
+        "\n",
+        first_line(block),
+        F.regexp_extract_all(block, F.lit(r"\n(FT    [^\n]*)"), 1),
+    )
+
+
+def block_protein_ids(candidate_text: Column) -> Column:
+    """P2 ``protein_id`` set of a block's candidate text."""
+    return F.array_distinct(
+        F.regexp_extract_all(candidate_text, F.lit(PROTEIN_ID_IN_BLOCK), 1)
+    )
+
+
+def block_uniprot_ids(candidate_text: Column) -> Column:
+    """P2 UniProtKB ``db_xref`` set of a block's candidate text."""
+    return F.array_distinct(
+        F.regexp_extract_all(candidate_text, F.lit(UNIPROT_XREF_IN_BLOCK), 1)
+    )
 
 
 # --- P7/P8: CDS location string ---------------------------------------------
 
-def cds_location_string(block_lines: Column) -> Column:
-    """P7: given ARRAY<STRING> of a CDS block's lines (in order), isolate
-    the location descriptor — join lines, cut at the first ``/``
-    (qualifiers), strip ``FT ``/``CDS ``/newlines/spaces
-    (parse_embl.py:129-132)."""
-    joined = F.substring_index(F.concat_ws("\n", block_lines), "/", 1)
-    out = joined
+def location_string(block_text: Column) -> Column:
+    """P7: isolate the location descriptor of a CDS block's candidate
+    text — cut at the first ``/`` (qualifiers), strip ``FT ``/``CDS ``/
+    newlines/spaces (parse_embl.py:129-132)."""
+    out = F.substring_index(block_text, "/", 1)
     for sub in ["FT ", "CDS ", "\n", " "]:
         out = F.replace(out, F.lit(sub), F.lit(""))
     return out
+
+
+def cds_location_string(block_lines: Column) -> Column:
+    """P7 over ARRAY<STRING> of a CDS block's lines (in order)."""
+    return location_string(F.concat_ws("\n", block_lines))
 
 
 def strand_direction(loc_str: Column) -> Column:

@@ -92,23 +92,29 @@ def resolved_span(ranges: Column, chr_struct: Column, chr_len: Column) -> Column
     Returns NULL for an empty/null ranges array (callers drop those rows
     first — operator F7).
     """
-    chr_len = chr_len.cast("long")
     # The reference sorts by start with a *stable* sort
     # (parse_embl.py:401), so equal-start ranges keep their original
     # order — observable in the circular gap analysis.  Reproduce by
     # sorting (start, original_index, end) structs.
-    n = F.size(ranges)
-    r = F.array_sort(
-        F.zip_with(
+    ordered = F.array_sort(
+        F.transform(
             ranges,
-            F.sequence(F.lit(1), n),
             lambda x, i: F.struct(
                 x["start"].alias("start"), i.alias("idx"), x["end"].alias("end")
             ),
         )
     )
-    starts = F.transform(r, lambda x: x["start"])
-    ends = F.transform(r, lambda x: x["end"])
+    # bind the sorted array to one lambda variable: every use below then
+    # reads it instead of rebuilding (and re-sorting) the expression
+    span = F.transform(
+        F.array(ordered), lambda r: _span(r, chr_struct, chr_len.cast("long"))
+    )[0]
+    return F.when(ranges.isNull() | (F.size(ranges) == 0), F.lit(None)).otherwise(span)
+
+
+def _span(r: Column, chr_struct: Column, chr_len: Column) -> Column:
+    n = F.size(r)
+    starts, ends = r["start"], r["end"]
 
     # Linear: min/max over every endpoint of the *flattened* tuple list —
     # not first-start/last-end — so malformed descending ranges behave
@@ -144,11 +150,10 @@ def resolved_span(ranges: Column, chr_struct: Column, chr_len: Column) -> Column
     )
 
     linear = chr_struct.cast("int") != F.lit(0)
-    span = F.struct(
+    return F.struct(
         F.when(linear, lin_start).otherwise(circ_start).cast("long").alias("start"),
         F.when(linear, lin_end).otherwise(circ_end).cast("long").alias("end"),
     )
-    return F.when(ranges.isNull() | (F.size(ranges) == 0), F.lit(None)).otherwise(span)
 
 
 def resolved_span_relational(

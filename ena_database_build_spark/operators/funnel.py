@@ -7,9 +7,9 @@ The naive relational form is one self-join per step (step k's min
 timestamp after step k-1's), i.e. k shuffles of the full event table.
 This operator instead matches the whole funnel in ONE user-keyed
 shuffle: collect each user's (ts, type) pairs, sort in-array, and run
-the step automaton as a higher-order ``aggregate`` fold — the same
-state-machine-as-fold pattern the EMBL record parser uses
-(operators/segmentation.py), applied to clickstream state.
+the step automaton as a higher-order ``aggregate`` fold — a state
+machine run as a fold over one ordered array, applied to clickstream
+state.
 
 Per-user arrays are bounded by a user's own activity (the unit real
 funnel engines also assume fits one task); the fold is a pure column

@@ -1,17 +1,22 @@
-"""Ordered-line sessionization (operators G1-G4).
+"""Record-grain segmentation (operators G1-G4).
 
 The reference parses each EMBL file with a single-pass state machine
-(ena_build/parse_embl.py:444-570).  Relationally that machine is two
-nested sessionizations over an ordered line stream; here they are
-conditional running sums over ``Window.partitionBy(file).orderBy(line_no)``.
+(ena_build/parse_embl.py:444-570): an ``ID`` line opens a record (G1),
+a feature-start line closes the previous feature block and opens the
+next (G2).  Here both boundaries are text splits, not running counts
+over lines:
 
-Scale note: one window partition = one file, which is exactly the
-reference's parallelism unit (one Dask task holds a handful of files —
-ena_build/dask_tasks.py:168-178).  EMBL files are "relatively small"
-(reference README.md:48), so a per-file partition fits executor memory;
-AQE handles stragglers.  All downstream group-bys key on
-``(file, record_idx, block_idx)`` which only ever *refines* the window
-partitioning.
+* a record frame holds one row per record, ``file, record_idx, text``,
+  where ``text`` is the record's lines joined by "\\n" (the wholetext
+  ingest splits each file blob at ``ID`` lines; :func:`records_from_lines`
+  builds the same frame from a line scan);
+* :func:`segment_records` parses every record in its own row: the ID
+  header, the Fungi gate and the CDS blocks, each block split off at
+  feature starts and reduced to its location string and id sets.
+
+Nothing is aggregated and nothing is joined: blocks stay nested in their
+record's row and inherit its header.  The one window runs over record
+rows, to number feature blocks across the whole file (``block_idx``).
 """
 
 from __future__ import annotations
@@ -21,203 +26,145 @@ from pyspark.sql import functions as F
 
 from ena_database_build_spark.functions import embl as E
 
+HEADER_COLUMNS = ["ena_id", "chr_struct", "chr_len", "reject_reason", "fungi_dropped"]
 
-def segment_lines(embl_lines: DataFrame) -> DataFrame:
-    """G1+G2: assign ``record_idx`` and ``block_idx`` to every retained line.
 
-    Input schema: ``file STRING, line_no LONG, line STRING`` (order pinned
-    by ``line_no``).  Output adds:
+def records_from_lines(lines: DataFrame, order: str = "line_no") -> DataFrame:
+    """G1 over a line scan: ``file, <order>, line`` -> the record frame.
 
-    * ``record_idx`` — running count of ``ID   `` lines in the file; each
-      ID line opens a new record (G1, parse_embl.py:494-520).  Lines
-      before the first ID get 0 and belong to no record.
-    * ``block_idx`` — running count of feature-block-start lines (P4);
-      every feature start closes the previous block and opens a new one
-      (G2, parse_embl.py:545-559).  Because an ID line does not increment
-      ``block_idx``, blocks are keyed by (record_idx, block_idx) so a
-      stale block index can never leak across records.
+    One running count of ``ID`` lines numbers the records, then one
+    ordered group per record joins its ``FT``/``ID``/``OC`` lines, the
+    only ones any parser step reads.  Lines before a file's first ``ID``
+    form record 0, which is kept only for its feature starts.
     """
     w = (
         Window.partitionBy("file")
-        .orderBy("line_no")
+        .orderBy(order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     line = F.col("line")
-    flagged = embl_lines.where(E.is_interesting_line(line)).select(
-        "*",
-        E.is_id_line(line).alias("is_id"),
-        E.is_feature_start(line).alias("is_ft_start"),
-        (
-            (E.is_feature_start(line) | E.is_qualifier_continuation(line))
-            & line.contains("/")
+    numbered = lines.where(E.is_interesting_line(line)).select(
+        "file",
+        order,
+        "line",
+        F.sum(E.is_id_line(line).cast("long")).over(w).alias("record_idx"),
+    )
+    return numbered.groupBy("file", "record_idx").agg(
+        F.concat_ws(
+            "\n", F.array_sort(F.collect_list(F.struct(order, "line")))["line"]
+        ).alias("text")
+    )
+
+
+def segment_records(records: DataFrame) -> DataFrame:
+    """G1-G3 per record row: the record frame -> one row per record
+    (``record_idx`` >= 1) with its parsed header and CDS blocks.
+
+    Output: ``file, record_idx, ena_id, chr_struct, chr_len,
+    reject_reason, fungi_dropped, block_offset, blocks``.
+
+    * header (P1, F4, F5) from the record's first line;
+    * ``fungi_dropped`` (F3): any OC line of the record names Eukaryota
+      without `` Fungi`` (parse_embl.py:527-535), which also sets
+      ``reject_reason``;
+    * ``blocks``: ARRAY<STRUCT<block_no, loc_str, protein_ids,
+      uniprot_ids>> of the CDS blocks in order (P5, parse_embl.py:557),
+      ``block_no`` being the block's feature ordinal in the record;
+    * ``block_offset``: feature starts earlier in the file, record 0
+      included, so ``block_offset + block_no`` is the file's running
+      feature count (G2's ``block_idx``).
+    """
+    text = F.col("text")
+    header = E.parse_id_line(E.first_line(text))
+    split = records.select(
+        "file",
+        "record_idx",
+        header.alias("h"),
+        E.is_voided_record(text).alias("fungi_dropped"),
+        # chunk 0 is the record's head (its ID line up to the first
+        # feature start); chunk i >= 1 is feature block i.  Only record 0
+        # of a line scan can open on a feature line, which is then
+        # chunk 0 and counts as one more feature (_lead).
+        E.starts_with_feature(text).cast("int").alias("_lead"),
+        F.split(text, E.FEATURE_SPLIT).alias("_chunks"),
+    )
+    cds = F.filter(
+        F.transform("_chunks", lambda c, i: F.struct(i.alias("block_no"), c.alias("t"))),
+        lambda b: (b["block_no"] > 0) & E.is_cds_head(b["t"]),
+    )
+    # the candidate text drops everything but the head and FT
+    # continuation lines, so the sequence that ends a record's last
+    # block is never copied past this point
+    cds = F.transform(
+        cds,
+        lambda b: F.struct(
+            b["block_no"].alias("block_no"), E.block_candidate_text(b["t"]).alias("t")
+        ),
+    )
+    cds = F.transform(
+        cds,
+        lambda b: F.struct(
+            b["block_no"].alias("block_no"),
+            E.location_string(b["t"]).alias("loc_str"),
+            E.block_protein_ids(b["t"]).alias("protein_ids"),
+            E.block_uniprot_ids(b["t"]).alias("uniprot_ids"),
+        ),
+    )
+    earlier = (
+        Window.partitionBy("file")
+        .orderBy("record_idx")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    n_features = F.size("_chunks") - 1 + F.col("_lead")
+    return (
+        split.select(
+            "file",
+            "record_idx",
+            F.col("h.ena_id").alias("ena_id"),
+            F.col("h.chr_struct").alias("chr_struct"),
+            F.col("h.chr_len").alias("chr_len"),
+            F.when(F.col("fungi_dropped"), F.lit("non_fungi_eukaryote"))
+            .otherwise(F.col("h.reject_reason"))
+            .alias("reject_reason"),
+            "fungi_dropped",
+            n_features.alias("_n_features"),
+            cds.alias("blocks"),
         )
-        .cast("int")
-        .alias("_has_slash"),
+        .select(
+            "*",
+            F.coalesce(F.sum("_n_features").over(earlier), F.lit(0)).alias(
+                "block_offset"
+            ),
+        )
+        .where(F.col("record_idx") > 0)
+        .drop("_n_features")
     )
-    # all three running sums share one Window spec -> ONE window pass
-    # (chained withColumn would plan separate Window operators)
-    return flagged.select(
-        "*",
-        F.sum(F.col("is_id").cast("long")).over(w).alias("record_idx"),
-        F.sum(F.col("is_ft_start").cast("long")).over(w).alias("block_idx"),
-        F.sum("_has_slash").over(w).alias("_slash_cum"),
-    )
+
+
+def segment_lines(embl_lines: DataFrame) -> DataFrame:
+    """G1-G3 over an ordered line frame ``file, line_no, line``."""
+    return segment_records(records_from_lines(embl_lines))
 
 
 def extract_records(segmented: DataFrame) -> DataFrame:
-    """Per-record header + taxonomy gate (P1, F3, F4, F5, F6).
-
-    Returns one row per (file, record_idx) with the parsed ID-line struct
-    flattened, plus ``fungi_dropped`` (F3: any OC line in the record names
-    Eukaryota without `` Fungi`` — parse_embl.py:527-535) and
-    ``reject_reason`` for the dead-letter channel.
-    """
-    # Only ID lines and record-voiding OC lines influence the record
-    # header — filter BEFORE the aggregation shuffle so it carries
-    # ~records-many rows, not every feature line of the corpus.
-    relevant = segmented.where(
-        F.col("is_id") | E.is_drop_taxonomy_line(F.col("line"))
-    )
-    return _aggregate_records(relevant)
-
-
-def _aggregate_records(flagged: DataFrame) -> DataFrame:
-    """Shared record-header aggregation: input rows carry ``file,
-    line_no, line, is_id, record_idx`` filtered to ID + voiding-OC
-    lines."""
-    parsed = flagged.withColumn(
-        "id_info",
-        F.when(F.col("is_id"), E.parse_id_line(F.col("line"))),
-    )
-    return (
-        parsed.where(F.col("record_idx") > 0)
-        .groupBy("file", "record_idx")
-        .agg(
-            # exactly one ID line per record_idx by construction
-            F.first("id_info", ignorenulls=True).alias("id_info"),
-            F.max(
-                E.is_drop_taxonomy_line(F.col("line")).cast("int")
-            ).alias("_fungi_drop"),
-        )
-        .select(
-            "file",
-            "record_idx",
-            F.col("id_info.ena_id").alias("ena_id"),
-            F.col("id_info.chr_struct").alias("chr_struct"),
-            F.col("id_info.chr_len").alias("chr_len"),
-            F.when(F.col("_fungi_drop") == 1, F.lit("non_fungi_eukaryote"))
-            .otherwise(F.col("id_info.reject_reason"))
-            .alias("reject_reason"),
-            (F.col("_fungi_drop") == 1).alias("fungi_dropped"),
-        )
-    )
+    """One row per record: ``file, record_idx`` plus the header columns
+    (``reject_reason`` feeds the dead-letter channel)."""
+    return segmented.select("file", "record_idx", *HEADER_COLUMNS)
 
 
 def extract_cds_blocks(segmented: DataFrame) -> DataFrame:
-    """G2 close-out: one row per CDS feature block, pre-digested.
-
-    A block belongs to a CDS iff its head line (the feature-start line
-    that opened it) starts with ``FT   CDS `` (P5, parse_embl.py:557).
-    Only the head line and ``FT    `` qualifier-continuation lines (P6,
-    parse_embl.py:564) enter the block's line buffer; anything else
-    inside the block span is ignored, matching the state machine's
-    fall-through.
-
-    Scale design: a buffered block line matters only as (a) part of the
-    location descriptor — the concatenation cut at the block's first
-    ``/`` (parse_embl.py:129) — or (b) an xref carrier (P2).  Both are
-    decided map-side here, over the same per-file sort the
-    segmentation window already established (no extra exchange): a
-    cumulative slash count per block marks post-qualifier lines, whose
-    text — including arbitrarily long ``/translation`` payloads — is
-    dropped BEFORE the block shuffle.  Only short location fragments
-    and extracted ids travel.
-
-    Output: ``file, record_idx, block_idx, first_line_no,
-    loc_parts ARRAY<STRING> (in line order), protein_ids, uniprot_ids``.
-    """
-    w = Window.partitionBy("file").orderBy("line_no")
-    line = F.col("line")
-    candidate = F.col("is_ft_start") | E.is_qualifier_continuation(line)
-    has_slash = F.col("_has_slash")
-    slash_cum = F.col("_slash_cum")  # computed in segment_lines' window pass
-    # slash count just before the current block's head line
-    block_base = F.last(
-        F.when(F.col("is_ft_start"), slash_cum - has_slash), ignorenulls=True
-    ).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    prior_slash = slash_cum - has_slash - block_base
-
-    pre = (
-        segmented.withColumn("_prior_slash", prior_slash)
-        .where(
-            (F.col("block_idx") > 0)
-            & (F.col("record_idx") > 0)
-            & candidate
-        )
-        .select(
-            "file",
-            "record_idx",
-            "block_idx",
-            "line_no",
-            "_prior_slash",
-            F.when(
-                F.col("_prior_slash") == 0,
-                F.when(
-                    line.contains("/"), F.substring_index(line, "/", 1)
-                ).otherwise(line),
-            ).alias("loc_part"),
-            E.protein_id(line).alias("protein_id"),
-            E.uniprot_id(line).alias("uniprot_id"),
-            (F.col("is_ft_start") & E.is_cds_head(line)).alias("is_cds_head"),
-            F.col("is_ft_start"),
-        )
-        .where(
-            (F.col("_prior_slash") == 0)
-            | F.col("protein_id").isNotNull()
-            | F.col("uniprot_id").isNotNull()
-        )
-        .drop("_prior_slash")
+    """One row per CDS block, carrying its record's header:
+    ``file, record_idx, <header>, block_idx, block_no, loc_str,
+    protein_ids, uniprot_ids``."""
+    return segmented.select(
+        "file", "record_idx", *HEADER_COLUMNS, "block_offset", F.inline("blocks")
+    ).select(
+        "file",
+        "record_idx",
+        *HEADER_COLUMNS,
+        (F.col("block_offset") + F.col("block_no")).alias("block_idx"),
+        "block_no",
+        "loc_str",
+        "protein_ids",
+        "uniprot_ids",
     )
-    return (
-        pre.groupBy("file", "record_idx", "block_idx")
-        .agg(
-            F.min("line_no").alias("first_line_no"),
-            F.max(
-                F.when(F.col("is_ft_start"), F.col("is_cds_head"))
-            ).alias("_head_is_cds"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("loc_part").isNotNull(),
-                        F.struct("line_no", "loc_part"),
-                    )
-                )
-            ).alias("_ordered"),
-            F.collect_set("protein_id").alias("protein_ids"),
-            F.collect_set("uniprot_id").alias("uniprot_ids"),
-        )
-        .where(F.col("_head_is_cds"))
-        .select(
-            "file",
-            "record_idx",
-            "block_idx",
-            "first_line_no",
-            F.transform(F.col("_ordered"), lambda s: s["loc_part"]).alias(
-                "loc_parts"
-            ),
-            "protein_ids",
-            "uniprot_ids",
-        )
-    )
-
-
-def number_loci(parsed_blocks: DataFrame) -> DataFrame:
-    """G4: assign ``locus_num`` = 1-based ordinal of *successfully parsed*
-    CDS blocks within a record, in block order (quirk SURVEY.md §2.10.4:
-    failed blocks — F7 — are dropped before numbering, reference
-    parse_embl.py:150-154 returns before the count increment at :190).
-
-    Input must already be filtered to blocks with >=1 location range.
-    """
-    w = Window.partitionBy("file", "record_idx").orderBy("first_line_no")
-    return parsed_blocks.withColumn("locus_num", F.row_number().over(w))

@@ -3,19 +3,20 @@
 Reference semantics (ena_build/parse_embl.py:444-570 +
 mysql_database.py:50-134) re-expressed Spark-first:
 
-    embl_lines ─ G1/G2 windows ─┬─ records  (P1, F3-F6)
-                                └─ cds blocks (P5/P6) ─ P7/P3/P8 ─ F7
+    record frame (one row per record's text)
+        ─ segment_records: header P1/F3-F6 + CDS blocks P5/P6/P7, in-row
                                         │
-                 records ⋈ blocks ─ A3/A4 span ─ G4 ordinals ─ A1 sets
+        live records ─ F7 in-row ─ G4 ordinals (posexplode) ─ A3/A4 span
                                         │
-                 explode protein_ids ⋈ idmapping (J1) ─ A-collect
+        explode protein_ids ⋈ idmapping (J1) ─ A-collect
                                         │
-                 J3 fallback-coalesce ─ O1 explode ─ O2 project → ena_tab
+        J3 fallback-coalesce ─ O1 explode ─ O2 project → ena_tab
 
-Pinned quirks (SURVEY.md §2.10): 1=linear encoding, strict-> circular
-gap tie-break, end<start legal, ordinals skip failed blocks, lenient
-range regex, same-line Fungi gate, mapping-hit-wins fallback, **no**
-global dedup of output rows.
+Blocks stay nested in their record's row, so no join brings headers and
+blocks back together.  Pinned quirks (SURVEY.md §2.10): 1=linear
+encoding, strict-> circular gap tie-break, end<start legal, ordinals
+skip failed blocks, lenient range regex, same-line Fungi gate,
+mapping-hit-wins fallback, **no** global dedup of output rows.
 """
 
 from __future__ import annotations
@@ -46,92 +47,54 @@ ENA_TAB_COLUMNS = [
 
 @dataclass
 class EnaBuildResult:
-    """All materialized channels of the pipeline (each still lazy)."""
+    """All channels of the pipeline (each still lazy) and the persisted
+    segmentation they read; call :meth:`unpersist` when done."""
 
+    segmented: DataFrame
     records: DataFrame
     loci: DataFrame
     ena_tab: DataFrame
     rejected_records: DataFrame
     rejected_blocks: DataFrame
 
-
-def parse_records(embl_lines: DataFrame) -> DataFrame:
-    segmented = S.segment_lines(embl_lines)
-    return S.extract_records(segmented)
+    def unpersist(self) -> None:
+        self.segmented.unpersist(blocking=True)
 
 
 def parse_loci(
-    embl_lines: DataFrame,
-    segmented: DataFrame | None = None,
-    broadcast_records: bool = False,
+    embl_lines: DataFrame | None = None, segmented: DataFrame | None = None
 ) -> DataFrame:
-    """records+blocks -> loci with resolved spans and per-locus id sets.
-
-    Pass a pre-computed (ideally persisted) ``segmented`` DataFrame to
-    avoid re-running ingest + windowing for each consumer branch.
-    """
+    """Segmented records -> loci with resolved spans and per-locus id
+    sets.  Pass ``segmented`` (see ``segmentation.segment_records``), or
+    an ordered line frame to segment."""
     if segmented is None:
         segmented = S.segment_lines(embl_lines)
-    # NB: a "light" records path that re-derived record_idx from a
-    # pre-filtered ID/OC line set measured 2-5x SLOWER end-to-end than
-    # sharing the segmented lineage (it forfeits subtree reuse with the
-    # blocks branch); keep both branches on `segmented`.
-    records = S.extract_records(segmented)
-    blocks = S.extract_cds_blocks(segmented)
-
-    live_records = records.where(
+    live = segmented.where(
         F.col("reject_reason").isNull() & (F.col("ena_id") != "")
     )
-
-    parsed = blocks.withColumn(
-        "loc_str", E.cds_location_string(F.col("loc_parts"))
-    ).withColumn("loc_ranges", location_ranges(F.col("loc_str")))
-
-    # F7: blocks with no x..y range are dropped *before* ordinal
-    # assignment (quirk §2.10.4) and contribute no xrefs at all.
-    good = parsed.where(F.size("loc_ranges") > 0)
-    numbered = S.number_loci(good)
-
-    # A1: per-locus xref sets were already collect_set'd map-side in
-    # extract_cds_blocks.
-    with_ids = numbered.select(
-        "file",
-        "record_idx",
-        "locus_num",
-        "first_line_no",
-        "loc_str",
-        "loc_ranges",
-        E.strand_direction(F.col("loc_str")).alias("direction"),
-        "uniprot_ids",
-        "protein_ids",
-    )
-
-    # Record join is 1:N on (file, record_idx).  Default
-    # broadcast_records=False: NO hint — a hint is always honored, and at
-    # corpus scale the record-header relation (one row per chromosome)
-    # can reach GBs; AQE decides from runtime sizes (broadcast when
-    # small, shuffle join on the existing file-prefixed partitioning
-    # otherwise).  Pass True to force the hint for small corpora where
-    # skipping AQE's size probe measurably helps; build_ena_tab /
-    # build_all plumb this through.
-    join_records = (
-        F.broadcast(live_records) if broadcast_records else live_records
-    )
-    joined = with_ids.join(join_records, ["file", "record_idx"])
-
-    return joined.select(
+    # F7: blocks with no x..y range are dropped *before* the ordinals
+    # (G4, quirk §2.10.4) and contribute no xrefs at all
+    good = F.filter("blocks", lambda b: has_range(b["loc_str"]))
+    loci = live.select(
         "file",
         "record_idx",
         "ena_id",
         "chr_struct",
         "chr_len",
-        "locus_num",
-        "direction",
-        resolved_span(
-            F.col("loc_ranges"), F.col("chr_struct"), F.col("chr_len")
-        ).alias("span"),
-        "uniprot_ids",
-        "protein_ids",
+        F.posexplode(good).alias("pos", "b"),
+    )
+    ranges = location_ranges(F.col("b.loc_str"))
+    return loci.select(
+        "file",
+        "record_idx",
+        "ena_id",
+        "chr_struct",
+        "chr_len",
+        (F.col("pos") + 1).alias("locus_num"),
+        E.strand_direction(F.col("b.loc_str")).alias("direction"),
+        resolved_span(ranges, F.col("chr_struct"), F.col("chr_len")).alias("span"),
+        F.col("b.uniprot_ids").alias("uniprot_ids"),
+        F.col("b.protein_ids").alias("protein_ids"),
     ).select(
         "file",
         "record_idx",
@@ -200,36 +163,17 @@ def resolve_uniprot_ids(
 
 
 def build_ena_tab(
-    embl_lines: DataFrame,
-    idmapping: DataFrame,
-    broadcast_mapping: bool = False,
-    broadcast_records: bool = False,
-    persist_intermediates: bool = False,
+    records: DataFrame, idmapping: DataFrame, broadcast_mapping: bool = False
 ) -> DataFrame:
-    """Full pipeline: ordered lines + idmapping -> the 7-column table.
+    """Full pipeline: record frame (``sources.embl.read_embl_records``)
+    + idmapping -> the 7-column table.
 
     Output grain: one row per (locus, resolved uniprot id list element);
     duplicates across overlapping input files are preserved (quirk
     §2.10.8 — the reference never dedups globally).
-
-    ``persist_intermediates`` caches the segmented lines and the loci.
-    Default OFF: the multi-consumer branches (records/blocks, the
-    explode/join sides of J1/J3) share identical exchange subplans that
-    Spark's ReuseExchange already dedups within the single write job,
-    and measurements show caching the 10^6-row line table costs more
-    (memory pressure + materialization) than it saves.  Turn on only
-    when running several separate actions over one small corpus.
     """
-    segmented = S.segment_lines(embl_lines)
-    if persist_intermediates:
-        segmented = segmented.persist()
-    loci = parse_loci(
-        embl_lines, segmented=segmented, broadcast_records=broadcast_records
-    )
-    if persist_intermediates:
-        loci = loci.persist()
-    resolved = resolve_uniprot_ids(loci, idmapping, broadcast_mapping)
-    return _project_ena_tab(resolved)
+    loci = parse_loci(segmented=S.segment_records(records))
+    return _project_ena_tab(resolve_uniprot_ids(loci, idmapping, broadcast_mapping))
 
 
 def _project_ena_tab(resolved: DataFrame) -> DataFrame:
@@ -248,37 +192,25 @@ def _project_ena_tab(resolved: DataFrame) -> DataFrame:
 
 
 def build_all(
-    embl_lines: DataFrame,
-    idmapping: DataFrame,
-    broadcast_mapping: bool = False,
-    broadcast_records: bool = False,
+    records: DataFrame, idmapping: DataFrame, broadcast_mapping: bool = False
 ) -> EnaBuildResult:
     """Run the pipeline and expose dead-letter channels (SURVEY.md §4.3:
     the reference print-and-skips malformed rows; we surface them as
     filterable DataFrames instead).
 
-    The segmented line table is persisted because the result's channels
-    are consumed as separate actions; call
-    ``result.records.sparkSession.catalog.clearCache()`` (or unpersist)
-    when done with a long-lived session.
+    The segmentation (parsed headers plus CDS blocks, never raw text) is
+    persisted because the channels are consumed as separate actions;
+    ``result.unpersist()`` releases it.
     """
-    segmented = S.segment_lines(embl_lines).persist()
-    records = S.extract_records(segmented)
-    loci = parse_loci(
-        embl_lines, segmented=segmented, broadcast_records=broadcast_records
-    )
-    resolved = resolve_uniprot_ids(loci, idmapping, broadcast_mapping)
-    ena_tab = _project_ena_tab(resolved)
-
-    rejected_records = records.where(F.col("reject_reason").isNotNull()).select(
+    segmented = S.segment_records(records).persist()
+    loci = parse_loci(segmented=segmented)
+    ena_tab = _project_ena_tab(resolve_uniprot_ids(loci, idmapping, broadcast_mapping))
+    headers = S.extract_records(segmented)
+    rejected_records = headers.where(F.col("reject_reason").isNotNull()).select(
         "file", "record_idx", "reject_reason"
     )
-    blocks = S.extract_cds_blocks(segmented)
     rejected_blocks = (
-        blocks.withColumn("loc_str", E.cds_location_string(F.col("loc_parts")))
-        # dead-letter gate only asks "no x..y range at all" — the
-        # pattern-match predicate, not the full parse (locations.has_range
-        # is pinned equivalent to size(location_ranges(s)) == 0 negated)
+        S.extract_cds_blocks(segmented)
         .where(~has_range(F.col("loc_str")))
         .select(
             "file",
@@ -287,4 +219,6 @@ def build_all(
             F.lit("unparseable_cds_location").alias("reject_reason"),
         )
     )
-    return EnaBuildResult(records, loci, ena_tab, rejected_records, rejected_blocks)
+    return EnaBuildResult(
+        segmented, headers, loci, ena_tab, rejected_records, rejected_blocks
+    )

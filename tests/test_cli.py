@@ -69,6 +69,26 @@ def test_cli_end_to_end(spark, corpus, idmapping_parquet, tmp_path):
     assert "non_fungi_eukaryote" in reasons
 
 
+def _storage_bytes(spark) -> int:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(info.memSize() for info in infos)
+
+
+def test_cli_releases_its_cache(spark, corpus, idmapping_parquet, tmp_path):
+    before = _storage_bytes(spark)
+    cli.main(
+        [
+            "--ena-paths", str(corpus),
+            "--output-dir", str(tmp_path / "ena_out"),
+            "--idmapping-parquet", idmapping_parquet,
+            "--rejects-dir", str(tmp_path / "rejects"),
+            "--master", "local[4]",
+            "--shuffle-partitions", "4",
+        ]
+    )
+    assert _storage_bytes(spark) == before
+
+
 def test_cli_requires_idmapping_source(capsys):
     with pytest.raises(SystemExit):
         cli.parse_args(["--ena-paths", "/x", "--output-dir", "/y"])

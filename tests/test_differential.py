@@ -29,11 +29,11 @@ def test_random_corpus_matches_reference(spark, tmp_path):
     _, ref_rows = bench_embl.run_reference(root, pairs)
 
     from ena_database_build_spark.plans.ena_pipeline import build_ena_tab
-    from ena_database_build_spark.sources.embl import read_embl_lines
+    from ena_database_build_spark.sources.embl import read_embl_records
 
     idmap = spark.createDataFrame(pairs, "foreign_id string, uniprot_id string")
     tab = build_ena_tab(
-        read_embl_lines(spark, str(root)), idmap, broadcast_mapping=True
+        read_embl_records(spark, str(root)), idmap, broadcast_mapping=True
     ).drop("file")
     spark_rows = sorted(
         "\t".join(str(v) for v in r) for r in tab.collect()

@@ -1,4 +1,5 @@
-"""Golden tests for the EMBL line expressions (P1, P2, P4, F3).
+"""Golden tests for the EMBL line and record-text expressions (P1, P2,
+P4, F3).
 
 Case data pinned by the reference suite tests/regex_test.py:6-56.
 """
@@ -69,6 +70,10 @@ FT_BLOCK_LINES = [
 def test_feature_start_goldens(spark):
     expected = [False, False, True, False, False, False, True, False, True]
     assert _bools(spark, FT_BLOCK_LINES, E.is_feature_start) == expected
+    # the record-text split opens one block per feature start
+    text = F.lit("\n".join(FT_BLOCK_LINES))
+    n = spark.range(1).select(F.size(F.split(text, E.FEATURE_SPLIT)) - 1).first()[0]
+    assert n == sum(expected)
 
 
 XREF_LINES = [
@@ -84,9 +89,16 @@ XREF_LINES = [
 ]
 
 
+def _as_block_line(id_set):
+    """Each golden line as the one line after a CDS head: its id set's
+    single element, or None."""
+    head = F.lit("FT   CDS             1..2\n")
+    return lambda line: F.try_element_at(id_set(F.concat(head, line)), F.lit(1))
+
+
 def test_xref_goldens(spark):
-    uniprot = _bools(spark, XREF_LINES, E.uniprot_id)
-    protein = _bools(spark, XREF_LINES, E.protein_id)
+    uniprot = _bools(spark, XREF_LINES, _as_block_line(E.block_uniprot_ids))
+    protein = _bools(spark, XREF_LINES, _as_block_line(E.block_protein_ids))
     assert uniprot == [None, None, "B6Y618", None, None, None, "B6Y619", None, None]
     assert protein == [
         None,
@@ -112,3 +124,11 @@ def test_fungi_gate(spark):
     ]
     got = _bools(spark, [c[0] for c in cases], E.is_drop_taxonomy_line)
     assert got == [c[1] for c in cases]
+    # the same gate over a record's text, the OC line after its ID line
+    id_line = F.lit("ID   X; SV 1; linear; genomic DNA; STD; PRO; 9 BP.\n")
+    voided = _bools(
+        spark,
+        [c[0] for c in cases],
+        lambda line: E.is_voided_record(F.concat(id_line, line)),
+    )
+    assert voided == [c[1] for c in cases]

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ena_database_build_spark.plans import ena_pipeline as P
-from ena_database_build_spark.sources.embl import read_embl_lines
+from ena_database_build_spark.sources.embl import read_embl_lines, read_embl_records
 from ena_database_build_spark.sources.sinks import write_ena_tab
 from tests.fixtures.embl_fixtures import EXPECTED_ENA_TAB, FILES, IDMAPPING
 
@@ -49,14 +49,13 @@ def _rows(df):
 
 
 def test_build_ena_tab_matches_reference_golden(spark, corpus, idmapping_df):
-    lines = read_embl_lines(spark, str(corpus))
-    tab = P.build_ena_tab(lines, idmapping_df, broadcast_mapping=True)
+    records = read_embl_records(spark, str(corpus))
+    tab = P.build_ena_tab(records, idmapping_df, broadcast_mapping=True)
     assert _rows(tab.select(P.ENA_TAB_COLUMNS)) == sorted(EXPECTED_ENA_TAB)
 
 
 def test_dead_letter_channels(spark, corpus, idmapping_df):
-    lines = read_embl_lines(spark, str(corpus))
-    res = P.build_all(lines, idmapping_df)
+    res = P.build_all(read_embl_records(spark, str(corpus)), idmapping_df)
     reasons = sorted(
         r["reject_reason"] for r in res.rejected_records.collect()
     )
@@ -69,6 +68,7 @@ def test_dead_letter_channels(spark, corpus, idmapping_df):
     blocks = res.rejected_blocks.collect()
     assert len(blocks) == 1  # the `467` single-base CDS
     assert blocks[0]["reject_reason"] == "unparseable_cds_location"
+    res.unpersist()
 
 
 def test_locus_ordinals_skip_failed_blocks(spark, corpus, idmapping_df):
@@ -83,8 +83,7 @@ def test_locus_ordinals_skip_failed_blocks(spark, corpus, idmapping_df):
 
 
 def test_tsv_sink_roundtrip(spark, corpus, idmapping_df, tmp_path):
-    lines = read_embl_lines(spark, str(corpus))
-    tab = P.build_ena_tab(lines, idmapping_df)
+    tab = P.build_ena_tab(read_embl_records(spark, str(corpus)), idmapping_df)
     out = tmp_path / "ena_tab"
     write_ena_tab(tab, str(out), partition_by_source_dir=True)
     back = (
@@ -107,7 +106,7 @@ def test_tsv_sink_roundtrip(spark, corpus, idmapping_df, tmp_path):
 
 def test_line_mode_ingest_equivalent(spark, corpus, idmapping_df):
     """The large-file fallback ingest (line mode) must produce the same
-    ordered lines and the same final table as wholetext mode."""
+    ordered lines as wholetext mode, and its records the golden table."""
     whole = read_embl_lines(spark, str(corpus))
     lines = read_embl_lines(spark, str(corpus), strategy="lines")
     key = lambda r: (r["file"], r["line_no"], r["line"])  # noqa: E731
@@ -118,5 +117,6 @@ def test_line_mode_ingest_equivalent(spark, corpus, idmapping_df):
     assert sorted(map(key, nonempty(whole).collect())) == sorted(
         map(key, nonempty(lines).collect())
     )
-    tab = P.build_ena_tab(lines, idmapping_df, broadcast_mapping=True)
+    records = read_embl_records(spark, str(corpus), strategy="lines")
+    tab = P.build_ena_tab(records, idmapping_df, broadcast_mapping=True)
     assert _rows(tab.select(P.ENA_TAB_COLUMNS)) == sorted(EXPECTED_ENA_TAB)

@@ -7,9 +7,10 @@ is exactly the case where ``strategy="lines"`` must take over
 records ~ 6 MB gzip'd / ~1.4M lines) and asserts the two strategies
 produce row-identical pipeline output — the correctness half of the
 fallback contract.  The memory half is structural: line mode never
-builds a file-sized row (each row is one line), which is the bounded-
-executor-memory argument at 256 MB+ members; run with the env var
-cranked up for a full-size soak.
+builds a file-sized row (a line row is one line, a record row one
+record's FT/ID/OC lines), which is the bounded-executor-memory argument
+at 256 MB+ members; run with the env var cranked up for a full-size
+soak.
 """
 
 import gzip
@@ -18,7 +19,7 @@ import os
 import pytest
 
 from ena_database_build_spark.plans import ena_pipeline as P
-from ena_database_build_spark.sources.embl import read_embl_lines
+from ena_database_build_spark.sources.embl import read_embl_lines, read_embl_records
 
 N_RECORDS = int(os.environ.get("SPARK_GRAFT_SCALE_PROBE_RECORDS", "20000"))
 
@@ -66,11 +67,11 @@ def idmapping_df(spark):
 
 def test_lines_fallback_identical_output(spark, big_corpus, idmapping_df):
     whole = P.build_ena_tab(
-        read_embl_lines(spark, str(big_corpus), strategy="wholetext"),
+        read_embl_records(spark, str(big_corpus), strategy="wholetext"),
         idmapping_df,
     )
     lines = P.build_ena_tab(
-        read_embl_lines(spark, str(big_corpus), strategy="lines"),
+        read_embl_records(spark, str(big_corpus), strategy="lines"),
         idmapping_df,
     )
     cols = P.ENA_TAB_COLUMNS
@@ -93,3 +94,15 @@ def test_lines_mode_rows_are_lines_not_blobs(spark, big_corpus):
     # bounded row width is the memory contract of the fallback
     assert stats["max_len"] < 10_000
     assert stats["n"] > N_RECORDS * 5
+
+
+def test_lines_mode_record_rows_hold_one_record(spark, big_corpus):
+    from pyspark.sql import functions as F
+
+    df = read_embl_records(spark, str(big_corpus), strategy="lines")
+    stats = df.agg(
+        F.max(F.length("text")).alias("max_len"), F.count("*").alias("n")
+    ).collect()[0]
+    # a record row holds that record's FT/ID/OC lines, never the file
+    assert stats["max_len"] < 10_000
+    assert stats["n"] == N_RECORDS

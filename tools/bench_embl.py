@@ -142,7 +142,7 @@ def run_reference(root: Path, pairs) -> tuple[float, list]:
 def run_spark(root: Path, pairs) -> tuple[float, list]:
     from ena_database_build_spark.plans.ena_pipeline import build_ena_tab
     from ena_database_build_spark.session import get_spark
-    from ena_database_build_spark.sources.embl import read_embl_lines
+    from ena_database_build_spark.sources.embl import read_embl_records
 
     spark = get_spark("embl-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -153,13 +153,7 @@ def run_spark(root: Path, pairs) -> tuple[float, list]:
 
     def build(paths: str):
         return build_ena_tab(
-            read_embl_lines(spark, paths),
-            idmap,
-            broadcast_mapping=True,
-            # record headers here are ~200k tiny rows — known broadcast-
-            # sized, so skip AQE's size probe (this was the pipeline
-            # default in round 1; now opt-in per call site)
-            broadcast_records=True,
+            read_embl_records(spark, paths), idmap, broadcast_mapping=True
         ).drop("file")
 
     # JIT/codegen warm-up on one shard only — the timed run below

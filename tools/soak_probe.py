@@ -3,7 +3,8 @@
 Generates ONE pathologically large gzipped EMBL member (default 400k
 records — ~1.9 GB decompressed text, ~28M lines), runs the pipeline
 under BOTH ingest strategies (``wholetext`` materializes the file as a
-single row; ``lines`` streams it as one row per line), asserts the two
+single row; ``lines`` streams it as one row per line, then one row per
+record holding that record's FT/ID/OC lines), asserts the two
 outputs are row-identical, and reports wall time plus the JVM's peak
 RSS (VmHWM) — the number that proves the ``lines`` fallback bounds
 executor memory on members far larger than the "relatively small"
@@ -32,7 +33,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from ena_database_build_spark.plans import ena_pipeline as P  # noqa: E402
 from ena_database_build_spark.session import get_spark  # noqa: E402
-from ena_database_build_spark.sources.embl import read_embl_lines  # noqa: E402
+from ena_database_build_spark.sources.embl import read_embl_records  # noqa: E402
 
 
 def write_corpus(root: Path, n_records: int) -> Path:
@@ -118,7 +119,7 @@ def main() -> None:
         for strategy in strategies:
             st = time.perf_counter()
             out = P.build_ena_tab(
-                read_embl_lines(spark, str(root), strategy=strategy), idmap
+                read_embl_records(spark, str(root), strategy=strategy), idmap
             )
             n = out.count()
             wall = round(time.perf_counter() - st, 1)
